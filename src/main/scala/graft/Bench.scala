@@ -1,59 +1,27 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // r7 driver-sweep inflation suspect: the whole-stage-codegen cache
-      // (static conf, default 100 entries) thrashes across 134 queries ×
-      // ~10 codegen stages × 3 sweeps — every sweep recompiles every
-      // stage (Janino compile + classload, tens of ms each, plus the
-      // metaspace/GC churn of the dead classloaders). Sized to hold
-      // every stage of the full suite so sweeps 2/3 compile nothing.
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     // O23 journal: per-query task metrics (input/shuffle/output volume)
     val journal = new graft.tools.QueryJournal
     spark.sparkContext.addSparkListener(journal)
-    // JIT/codegen warmup, untimed: the first timed query otherwise pays
-    // ~5 s of classloading + whole-stage-codegen compilation that has
-    // nothing to do with the query itself.
-    try Tables.lineitem(spark, sfDir).limit(1000)
-      .groupBy("l_returnflag").count().count()
-    catch { case _: Throwable => }
+    Harness.warmup(spark, sfDir)
     // failed queries report -1 (a best-of-two minimum of a time-to-throw
     // would otherwise read as a deceptively fast success)
     // optional args: query names to bench (all when empty — the driver
     // passes none)
     val only = args.toSet
-    def sweep(): Map[String, Double] = SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .map { case (name, fn) =>
-      // index registration is per-query state: without the clear, a
-      // search query benched after art_search_indexed would silently run
-      // the index-join plan and best-of-two would mix two plans
-      graft.plans.TextIndexCatalog.clear()
-      journal.start(name)
-      val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true }
-        catch { case _: Throwable => false }
-      val dt = (System.nanoTime() - t0) / 1e9
-      // release per-query persisted intermediates (cache release is
-      // charged to the query that created them)
-      spark.catalog.clearCache()
-      name -> (if (ok) dt else -1.0)
-    }
+    // per-query state (persisted intermediates, index registrations) is
+    // released after each query, outside its timed interval
+    def sweep(): Map[String, Double] =
+      Harness.eachQuery(spark, sfDir, only) { (name, fn) =>
+        journal.start(name)
+        val t0 = System.nanoTime()
+        fn(spark, sfDir).count()
+        (System.nanoTime() - t0) / 1e9
+      }.map { case (name, r) => name -> r.getOrElse(-1.0) }.toMap
     // three sweeps, best-of per query: single-run numbers on this box
     // vary ±30-40% (occasional 3x outliers) from GC/JIT/IO interference,
     // and the minimum over three is a materially tighter estimate of the
@@ -93,8 +61,7 @@ object Bench {
     // single line got truncated into an unparseable BENCH json
     println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"failed":$fs,"queries":$qs3,"sf":"$sfDir"}""")
     println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"n_failed":${failed.size},"sf":"$sfDir"}""")
-    // listener bus is async; give it a moment to drain before snapshotting
-    Thread.sleep(1000)
+    org.apache.spark.ListenerBusDrain.waitUntilEmpty(spark.sparkContext)
     // runtime-plan adjudications (e.g. the rel_skew_null_bucket AQE
     // skew-split count) ride along with the task metrics
     Files.writeString(Paths.get("bench_journal.jsonl"),

@@ -1,6 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
+import java.io.File
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -10,51 +11,23 @@ object Verify {
     val sfDir = args(0)
     val outDir = args(1)
     val only: Set[String] = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // same execution confs as Bench (r15): the oracle must validate
-      // results under the exact configuration the bench times
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // queries may persist() intermediates (LSH signatures, IVF
-      // assignments); release them so cache doesn't accumulate across
-      // the 60-query sweep. Index registration is likewise per-query
-      // state: cleared so each query's plan is order-independent.
-      spark.catalog.clearCache()
-      graft.plans.TextIndexCatalog.clear()
+    // the oracle validates results under the exact configuration the
+    // bench times
+    val spark = Harness.session()
+    new File(outDir).mkdirs()
+    Harness.eachQuery(spark, sfDir, only) { (name, fn) =>
+      fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+    }.foreach {
+      case (name, Left(e)) => System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      case _ =>
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    writeOracleSql(new File(s"$outDir/oracle_sql.json"), SparkEntry.oracleSql)
     spark.stop()
   }
+
+  /** query name -> DuckDB SQL as one JSON object: quotes, backslashes and
+    * control characters are escaped, so a strict JSON reader (Python's
+    * json.load in the oracle compare) reads any SQL. */
+  def writeOracleSql(file: File, sql: Map[String, String]): Unit =
+    new ObjectMapper().registerModule(DefaultScalaModule).writeValue(file, sql)
 }

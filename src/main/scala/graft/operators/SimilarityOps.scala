@@ -1440,13 +1440,8 @@ object SimilarityOps {
       .select("q_id", "vec_id")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val bTot = brute.agg(count(lit(1)).as("possible"))
-    // broadcast the ≤|queries|·10-row ANN result into the hit count:
-    // the planner saw only the persisted frames' unknown-size estimates
-    // and planned SortMergeJoin — four sort+exchange rounds per arm for
-    // two 50-row inputs (r16, guide §3.1 pick the strategy deliberately)
     def one(m: DataFrame, name: String): DataFrame =
-      brute.join(broadcast(m.select("q_id", "vec_id")),
-          Seq("q_id", "vec_id"), "left_semi")
+      brute.join(m.select("q_id", "vec_id"), Seq("q_id", "vec_id"), "left_semi")
         .agg(count(lit(1)).as("hits"))
         .crossJoin(bTot) // 1-row × 1-row
         .select(lit(name).as("method"), col("hits"), col("possible"),

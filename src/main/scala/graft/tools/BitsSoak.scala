@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.operators.SimilarityOps
 
 /** autoBits VALIDATION ABOVE THE MEASURED RANGE — the committed
@@ -31,12 +29,7 @@ object BitsSoak {
   def main(args: Array[String]): Unit = {
     val occDocs = args.headOption.map(_.toLong).getOrElse(500000L)
     val tradeDocs = args.drop(1).headOption.map(_.toLong).getOrElse(50000L)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Harness.session()
 
     def autoFor(sfDir: String): Int = {
       val n = graft.Tables.load(spark, sfDir, "embeddings").count()

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.plans.TextIndexCatalog
@@ -45,12 +45,7 @@ object IndexSoak {
     val mult = args.drop(1).headOption.map(_.toInt).getOrElse(10)
     val deltaDocs = args.drop(2).headOption.map(_.toLong).getOrElse(500L)
     val reps = args.drop(3).headOption.map(_.toInt).getOrElse(2)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Harness.session()
 
     // (variant, scale) -> (fullSecs, deltaSecs, deltaFiles, checksumOk)
     val results = scala.collection.mutable.LinkedHashMap
@@ -76,8 +71,7 @@ object IndexSoak {
           // manifest) — 32 files like a production partitioned write
           graft.Tables.synthTable(spark, "documents", n, 32)
             .write.mode("overwrite").parquet(docsDir)
-          TextIndexCatalog.clear()
-          TextIndexCatalog.purgeDirs(sf)
+          graft.Harness.reset(spark, sf)
           val t0 = System.nanoTime()
           val idx = ensure(sf)
           fullMin = math.min(fullMin, (System.nanoTime() - t0) / 1e9)

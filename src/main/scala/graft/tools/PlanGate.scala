@@ -31,7 +31,7 @@ object PlanGate {
   /** Count the operators that matter for the 100 TB story off the
     * executed-plan string (string-level counting is stable under AQE
     * wrapping; the audit runs with AQE off for the planner's static
-    * worst case). Shared with PlanAudit's markdown table. */
+    * worst case). */
   def shapeOf(plan: String): Shape = {
     def n(p: String) = p.r.findAllIn(plan).length
     val spans = "\\*\\((\\d+)\\)".r.findAllMatchIn(plan).map(_.group(1)).toSet.size
@@ -113,33 +113,20 @@ object PlanGate {
     * soft "no longer registered" warning. */
   def currentShapes(spark: SparkSession, sfDir: String)
       : (Map[String, Shape], Map[String, String]) = {
-    val shapes = Map.newBuilder[String, Shape]
-    val failed = Map.newBuilder[String, String]
-    graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try shapes += name ->
-        shapeOf(fn(spark, sfDir).queryExecution.executedPlan.toString)
-      catch {
-        case e: Throwable =>
-          System.err.println(s"[plangate] $name plan failed: ${e.getMessage}")
-          failed += name -> s"${e.getClass.getSimpleName}: ${e.getMessage}"
-      }
-      spark.catalog.clearCache()
-      graft.plans.TextIndexCatalog.clear()
+    val rs = graft.Harness.eachQuery(spark, sfDir) { (_, fn) =>
+      shapeOf(fn(spark, sfDir).queryExecution.executedPlan.toString)
     }
-    (shapes.result(), failed.result())
+    val failed = rs.collect { case (name, Left(e)) =>
+      System.err.println(s"[plangate] $name plan failed: ${e.getMessage}")
+      name -> s"${e.getClass.getSimpleName}: ${e.getMessage}"
+    }
+    (rs.collect { case (name, Right(s)) => name -> s }.toMap, failed.toMap)
   }
 
   def main(args: Array[String]): Unit = {
     val write = args.contains("--write")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Harness.session(graft.Harness.audit: _*)
     val (current, failed) = currentShapes(spark, sfDir)
     spark.stop()
     if (write && failed.nonEmpty) {

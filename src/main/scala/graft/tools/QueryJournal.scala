@@ -20,7 +20,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
   * executor run time — was inflated by the box, not its plan.
   *
   * Metrics arrive on the async listener bus, so totals are eventually
-  * consistent; callers either drain with a short wait (Bench) or poll
+  * consistent; callers either drain the listener bus (Bench) or poll
   * (spec). Thread-safe via LongAdder/LongAccumulator cells. */
 class QueryJournal extends SparkListener {
 

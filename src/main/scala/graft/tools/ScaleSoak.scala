@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.ListenerBusDrain
 
 /** SCALE SOAK — measured scaling evidence for the heaviest query
   * families, replacing extrapolated 100 TB claims with numbers: every
@@ -80,13 +80,8 @@ object ScaleSoak {
         allFamilies.filter(want)
       case None => allFamilies
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = graft.Harness.cpus
+    val spark = graft.Harness.session()
     val qs = graft.SparkEntry.queries
     // per-run JOB evidence rides a listener: n_jobs is the structural
     // claim for the iterative families (rounds × actions, not data
@@ -130,32 +125,19 @@ object ScaleSoak {
       // (the 100× ANN build OOMed a 64 GB heap at the 1×-sized 32
       // partitions; AQE coalesces any oversizing back down)
       spark.conf.set("spark.sql.shuffle.partitions",
-        math.min(256, cpus.toInt * math.max(1, scale / 4)).toString)
+        math.min(256, cpus * math.max(1, scale / 4)).toString)
       for (q <- families) {
         var cold = Double.MaxValue
         var coldJobs = 0L
         var coldJobSecs = 0.0
         var rows = 0L
         var metrics = ""
-        // job metrics ride the ASYNC SparkListener bus: sampling the
-        // counters right after collect() can miss trailing onJobEnd
-        // events (undercounted n_jobs/job_secs, events bleeding into
-        // the next run). listenerBus.waitUntilEmpty is private[spark],
-        // so settle instead: poll until (count, nanos, in-flight jobs)
-        // hold still across two consecutive reads, bounded at 2 s.
-        def drainListenerBus(): Unit = {
-          var prev = (-1L, -1L, -1)
-          var spins = 0
-          while (spins < 80 && { // 80 × 25 ms = 2 s bound
-            val cur = (jobCount.get(), jobNanos.get(), jobStarts.size())
-            val stable = cur == prev && cur._3 == 0
-            prev = cur
-            !stable
-          }) { Thread.sleep(25); spins += 1 }
-        }
-        // returns (wall secs, jobs run, summed job secs) for ONE run
+        // returns (wall secs, jobs run, summed job secs) for ONE run.
+        // Job metrics ride the ASYNC SparkListener bus: sampling the
+        // counters without a drain can miss trailing onJobEnd events
+        // (undercounted n_jobs/job_secs, events bleeding into the next run)
         def run(): (Double, Long, Double) = {
-          drainListenerBus()
+          ListenerBusDrain.waitUntilEmpty(spark.sparkContext)
           val j0 = jobCount.get(); val n0 = jobNanos.get()
           val t0 = System.nanoTime()
           val collected = qs(q)(spark, sfDir).collect() // full materialization
@@ -166,28 +148,13 @@ object ScaleSoak {
           if (rows <= 4 && collected.nonEmpty)
             metrics = collected.map(_.toString).mkString(" ")
           spark.catalog.clearCache() // intra-query persists only
-          drainListenerBus()
+          ListenerBusDrain.waitUntilEmpty(spark.sparkContext)
           (secs, jobCount.get() - j0, (jobNanos.get() - n0) / 1e9)
         }
         (1 to reps).foreach { _ =>
-          graft.operators.SimilarityOps.clearKnnIndexCache()
-          graft.operators.TextOps.clearLmCache()
-          graft.operators.DedupOps.clearDedupCache()
-          graft.operators.DedupOps.clearPublishedTables()
-          // the DISK layer under the session catalogs: purged so cold
-          // includes the durable build+write — except under
-          // SOAK_KEEP_STORES=1, the durable-overlay measurement seam
-          // (a FRESH JVM whose "cold" serves a prior invocation's
-          // store: the fresh-JVM reuse number the r13 verdict asked
-          // the disk-backed catalogs to prove)
-          if (!sys.env.get("SOAK_KEEP_STORES").contains("1")) {
-            graft.operators.SimilarityOps.purgeKnnStore(sfDir)
-            graft.operators.TextOps.purgeLmStore(sfDir)
-            graft.operators.DedupOps.purgePublishedStore(spark, sfDir)
-          }
-          graft.plans.TextIndexCatalog.clear()
-          graft.plans.TextIndexCatalog.purgeDirs(sfDir)
-          spark.catalog.clearCache()
+          // session catalogs and the disk stores under them, so cold
+          // includes the durable build+write
+          graft.Harness.reset(spark, sfDir)
           val (secs, jobs, jobSecs) = run()
           if (secs < cold) { cold = secs; coldJobs = jobs; coldJobSecs = jobSecs }
         }

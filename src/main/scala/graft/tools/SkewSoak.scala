@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** SKEW / RUNTIME-FILTER SOAK AT VOLUME — ScaleBehaviorSpec proves the
@@ -44,28 +44,26 @@ object SkewSoak {
 
   def main(args: Array[String]): Unit = {
     val baseRows = args.headOption.map(_.toLong).getOrElse(2000000L)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
+    val spark = graft.Harness.session(
+      // the skew arm's hot partition is sized against 64 shuffle
+      // partitions, one per range partition of the fact
+      "spark.sql.shuffle.partitions" -> "64",
       // production defaults, stated explicitly so the soak's contract
       // is visible: NOTHING below is scoped down
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "5.0")
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "256MB")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB")
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      .config("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "10MB")
-      .config("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "10GB")
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "5.0",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "256MB",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64MB",
+      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+      "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "10MB",
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "10GB",
       // the dim sides below are sized past broadcast range on purpose —
       // a broadcast join has no skew problem to solve and no shuffle to
       // bloom-prune; production disables nothing, it just meets a dim
       // that does not fit
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
 
     val md = scala.collection.mutable.ArrayBuffer.empty[String]
 

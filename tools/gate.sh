@@ -5,6 +5,8 @@
 #   tools/gate.sh [sfDir]        # default /root/testdata/sf0.01
 #
 # Chains, failing fast on the first red:
+#   0. one session factory      — graft.Harness holds the only
+#                                 SparkSession.builder in src/main
 #   1. sbt test                 — every ScalaTest suite (streaming,
 #                                 property, plan-shape, spill specs)
 #   2. graft.EntrySmoke         — flagship query returns rows at sf0.001
@@ -27,6 +29,11 @@ cd "$(dirname "$0")/.."
 SF="${1:-/root/testdata/sf0.01}"
 OUT="$(mktemp -d /tmp/graft-gate.XXXXXX)"
 trap 'rm -rf "$OUT"' EXIT
+
+echo "== gate 0/4: one session factory =="
+BUILDERS="$(grep -rl 'SparkSession.builder' src/main || true)"
+[ "$BUILDERS" = "src/main/scala/graft/Harness.scala" ] || {
+  echo "FAIL: SparkSession.builder outside graft.Harness: $BUILDERS"; exit 1; }
 
 echo "== gate 1/4: sbt test =="
 sbt -batch test
