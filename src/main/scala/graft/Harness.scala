@@ -76,10 +76,11 @@ object Harness {
     graft.plans.TextIndexCatalog.clear()
   }
 
-  /** The full cold seam: every session catalog and every on-disk store
-    * the engine keeps for `sfDir`. */
+  /** The full cold seam: every session catalog, the relation memo and
+    * every on-disk store the engine keeps for `sfDir`. */
   def reset(spark: SparkSession, sfDir: String): Unit = {
     import graft.operators.{DedupOps, SimilarityOps, TextOps}
+    Tables.clear()
     SimilarityOps.clearKnnIndexCache()
     SimilarityOps.purgeKnnStore(sfDir)
     TextOps.clearLmCache()

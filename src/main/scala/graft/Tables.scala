@@ -26,25 +26,38 @@ object Tables {
       case _ => resolved(spark, s"$sfDir/$name.parquet")
     }
 
-  /** Resolved-relation memo: `spark.read.parquet(path)` pays DataSource
-    * resolution — file listing, parquet footer schema read, relation
-    * construction — on EVERY call, and the rule-time census priced that
-    * at ~78 ms/query across the suite (ResolveDataSource was 21.9 s of
-    * the 34.6 s total Catalyst time per bench sweep, r15). A catalog
-    * table resolves once and serves the cached relation; this memo is
-    * that catalog behaviour for the path-loaded driver tables. It
-    * caches the resolved DataFrame HANDLE (logical plan + schema +
-    * file index) — never rows or results; every action over it still
-    * scans parquet.
+  /** The one resolved-relation memo: `spark.read.parquet(path)` pays
+    * DataSource resolution — file listing, a schema-inference job over
+    * the parquet footers, relation construction — on EVERY call, and
+    * the rule-time census priced that at ~78 ms/query across the suite
+    * (ResolveDataSource was 21.9 s of the 34.6 s total Catalyst time
+    * per bench sweep, r15). A catalog table resolves once and serves the
+    * cached relation; this memo is that catalog behaviour for every
+    * path the engine reads: the driver tables, the postings indexes, the
+    * durable frame stores and the media landing zones. It caches the
+    * resolved DataFrame HANDLE (logical plan + schema + file index) —
+    * never rows or results; analysis, optimization and planning still
+    * run per query, and every action still scans the files.
     *
-    * Staleness: keyed by session (a DataFrame is session-bound) and
-    * validated against the same name:length:mtime listing fingerprint
-    * [[rowCount]] uses, so a table rewritten in place re-resolves
-    * instead of serving a stale file index. The fingerprint is one
-    * driver-side listStatus per call — microseconds against the
-    * ~50-100 ms resolution it replaces. */
-  private def resolved(spark: SparkSession, path: String): DataFrame = {
-    val fp = listingFingerprint(spark, path)
+    * Staleness: keyed by session (a DataFrame is session-bound) and by
+    * path, validated against the name:length:mtime listing fingerprint
+    * [[rowCount]] uses, so a directory rewritten or appended to (a
+    * rebuilt or delta-appended index writes new part files) re-resolves
+    * and replaces the entry instead of serving a stale file index. The
+    * fingerprint is one driver-side listStatus per call — microseconds
+    * against the ~50-100 ms resolution it replaces.
+    *
+    * A plan spliced into an ALREADY-ANALYZED plan (an optimizer rule's
+    * rewrite) must re-bind the memoized relation with fresh attribute
+    * ids (`LogicalRelation.newInstance`): every serve hands out the same
+    * ids, and the analyzer's self-join deduplication has already run. */
+  private[graft] def resolved(spark: SparkSession, path: String): DataFrame =
+    resolved(spark, path, listing(spark, path)._2)(spark.read.parquet(path))
+
+  /** [[resolved]] with the caller's staleness key `fp` and `load` in
+    * place of the listing fingerprint and the parquet read. */
+  private[graft] def resolved(spark: SparkSession, key: String, fp: Long)
+                             (load: => DataFrame): DataFrame = {
     val perSession = relationCache.synchronized {
       // cached DataFrames strongly reference their SparkSession, so the
       // weak keying alone never collects stopped sessions (r15 advice);
@@ -59,11 +72,11 @@ object Tables {
       }
       m
     }
-    perSession.get(path) match {
+    perSession.get(key) match {
       case Some((`fp`, df)) => df
       case _ =>
-        val df = spark.read.parquet(path)
-        perSession.put(path, (fp, df))
+        val df = load
+        perSession.put(key, (fp, df))
         df
     }
   }
@@ -76,13 +89,21 @@ object Tables {
     SparkSession,
     scala.collection.concurrent.TrieMap[String, (Long, DataFrame)]]
 
-  /** name:length:mtime fingerprint of the (possibly nested) file listing
-    * under `path` — the staleness key shared by [[resolved]] and
-    * [[rowCount]]. */
-  private def listingFingerprint(spark: SparkSession, path: String): Long = {
-    val conf = spark.sessionState.newHadoopConf()
+  /** Drops the relation memo and the row-count cache: the cold seam. */
+  private[graft] def clear(): Unit = {
+    relationCache.synchronized(relationCache.clear())
+    rowCountCache.clear()
+  }
+
+  /** The data files under `path`, recursively (a partitioned or nested
+    * layout must be seen, not silently skipped; '_' and '.' prefixes are
+    * sidecar conventions such as _SUCCESS and .crc, never data), with
+    * their name:length:mtime fingerprint — the staleness key shared by
+    * [[resolved]] and [[rowCount]]. */
+  private def listing(spark: SparkSession, path: String)
+      : (Seq[org.apache.hadoop.fs.FileStatus], Long) = {
     val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(conf)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     def dataFiles(p: org.apache.hadoop.fs.Path)
         : Iterator[org.apache.hadoop.fs.FileStatus] =
       fs.listStatus(p).iterator
@@ -92,9 +113,9 @@ object Tables {
     val files =
       if (fs.getFileStatus(root).isDirectory) dataFiles(root).toSeq
       else Seq(fs.getFileStatus(root))
-    files.iterator
+    (files, files.iterator
       .map(s => (s.getPath.getName, s.getLen, s.getModificationTime).hashCode())
-      .foldLeft(files.size.toLong)((a, h) => a * 1000003L + h)
+      .foldLeft(files.size.toLong)((a, h) => a * 1000003L + h))
   }
 
   /** `sfDir = "synth:<nDocs>[:<partitions>]"` swaps the parquet corpus
@@ -289,34 +310,16 @@ object Tables {
     }
     case _ =>
       val path = s"$sfDir/$name.parquet"
-      val conf = spark.sessionState.newHadoopConf()
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(conf)
-      // recurse: a partitioned/nested layout (part dirs under the
-      // table root) must be counted, not silently skipped; '_' and '.'
-      // prefixes are both sidecar conventions (_SUCCESS, .crc) and
-      // neither is a data file
-      def dataFiles(p: org.apache.hadoop.fs.Path)
-          : Iterator[org.apache.hadoop.fs.FileStatus] =
-        fs.listStatus(p).iterator
-          .filter(s => !s.getPath.getName.startsWith("_") &&
-            !s.getPath.getName.startsWith("."))
-          .flatMap(s => if (s.isDirectory) dataFiles(s.getPath) else Iterator(s))
-      val files =
-        if (fs.getFileStatus(root).isDirectory) dataFiles(root).toSeq
-        else Seq(fs.getFileStatus(root))
-      // validate on the listing fingerprint, keyed by path: a table
-      // rewritten in-session (new mtimes / sizes / file count) must
-      // re-read footers, not serve the stale sum — and the rewrite
-      // must EVICT the prior entry, not leave it beside the new one
-      // (fingerprint-embedding keys grow without bound across long
-      // soak sessions of repeated publishes)
-      val fp = files.iterator
-        .map(s => (s.getPath.getName, s.getLen, s.getModificationTime).hashCode())
-        .foldLeft(files.size.toLong)((a, h) => a * 1000003L + h)
+      // validated on the listing fingerprint, keyed by path: a table
+      // rewritten in-session must re-read footers, not serve the stale
+      // sum — and the rewrite must EVICT the prior entry, not leave it
+      // beside the new one (fingerprint-embedding keys grow without
+      // bound across long soak sessions of repeated publishes)
+      val (files, fp) = listing(spark, path)
       rowCountCache.get(path) match {
         case Some((`fp`, n)) => n
         case _ =>
+          val conf = spark.sessionState.newHadoopConf()
           val n = files.iterator.map { s =>
             val in = org.apache.parquet.hadoop.util.HadoopInputFile
               .fromStatus(s, conf)

@@ -401,7 +401,7 @@ object ArticleOps {
     require(terms.nonEmpty,
       "phrase search needs at least one non-space token")
     val idxPath = graft.plans.TextIndexCatalog.ensureIndex(spark, sfDir)
-    val cand = spark.read.parquet(idxPath)
+    val cand = Tables.resolved(spark, idxPath)
       .filter(col("term").isin(terms.distinct.toSeq: _*))
       .groupBy("doc_id").agg(countDistinct(col("term")).as("nt"))
       .filter(col("nt") === terms.distinct.length)
@@ -440,7 +440,7 @@ object ArticleOps {
     require(terms.nonEmpty,
       "phrase search needs at least one non-space token")
     val idxPath = graft.plans.TextIndexCatalog.ensureIndex(spark, sfDir)
-    val post = spark.read.parquet(idxPath)
+    val post = Tables.resolved(spark, idxPath)
     def positionsOf(t: String, shift: Int) =
       post.filter(col("term") === t)
         .select(col("doc_id"), explode(col("positions")).as("p"))
@@ -472,7 +472,7 @@ object ArticleOps {
   def searchFuzzy(spark: SparkSession, sfDir: String,
                   keyword: String = "soft", maxDist: Int = 1): DataFrame = {
     val idxPath = graft.plans.TextIndexCatalog.ensureIndex(spark, sfDir)
-    val post = spark.read.parquet(idxPath)
+    val post = Tables.resolved(spark, idxPath)
     val cand = post.select("term").distinct()
       .filter(levenshtein(col("term"), lit(keyword.toLowerCase),
         maxDist) =!= -1)
@@ -634,7 +634,7 @@ object ArticleOps {
                        mu: Long = 2000L): DataFrame = {
     val kws = keywords.map(_.toLowerCase)
     val idxPath = graft.plans.TextIndexCatalog.ensureIndex(spark, sfDir)
-    val post = spark.read.parquet(idxPath)
+    val post = Tables.resolved(spark, idxPath)
     val dl = post.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
     val tf = post.filter(col("term").isin(kws: _*))
       .select("doc_id", "term", "tf")
@@ -675,7 +675,7 @@ object ArticleOps {
                         keywords: Seq[String] = Seq("spark", "merge")): DataFrame = {
     val kws = keywords.map(_.toLowerCase)
     val idxPath = graft.plans.TextIndexCatalog.ensureIndex(spark, sfDir)
-    val post = spark.read.parquet(idxPath)
+    val post = Tables.resolved(spark, idxPath)
     val dl = post.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
     val stats = dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("tot"))
     val tf = post.filter(col("term").isin(kws: _*))
@@ -741,7 +741,7 @@ object ArticleOps {
                            keyword: String = "merge"): DataFrame = {
     val kw = keyword.toLowerCase
     val idxPath = graft.plans.TextIndexCatalog.ensureIndex(spark, sfDir)
-    val hits = spark.read.parquet(idxPath)
+    val hits = Tables.resolved(spark, idxPath)
       .filter(col("term") === kw)
       .select(col("doc_id"),
         (element_at(col("positions"), 1) + 1).cast("long").as("p"))
@@ -868,7 +868,7 @@ object ArticleOps {
   def searchStemmedIndexed(spark: SparkSession, sfDir: String,
                            keyword: String = "merges"): DataFrame = {
     val idxDir = graft.plans.TextIndexCatalog.ensureStemmedIndex(spark, sfDir)
-    val probe = spark.read.parquet(idxDir)
+    val probe = Tables.resolved(spark, idxDir)
       .filter(col("term") ===
         graft.operators.TextOps.stemToken(lit(keyword.toLowerCase)))
       .select("doc_id")

@@ -885,20 +885,13 @@ object MultimodalOps {
   private val mediaLocks =
     scala.collection.concurrent.TrieMap.empty[(String, String), Object]
 
-  /** Resolved-relation memo for the landing-zone binaryFile reads —
-    * the [[graft.Tables]] `resolved` discipline (r15, guide §7.3
-    * driver-side work): `spark.read.format("binaryFile").load` pays a
-    * fresh driver-side file listing + relation construction of ~6 k
-    * file entries on EVERY call (~0.3-0.5 s at sf0.1, ×3 queries ×3
-    * sweeps), yet the zone only changes when it is rebuilt. Keyed by
-    * (dir, glob, `_COMPLETE` mtime) so a rebuilt zone re-resolves;
-    * weak-keyed by session so a stopped session's relations are never
-    * served. Caches the DataFrame HANDLE only — every action still
+  /** The landing-zone binaryFile read, through the session relation
+    * memo ([[graft.Tables.resolved]]): `spark.read.format("binaryFile")
+    * .load` pays a fresh driver-side file listing + relation
+    * construction of ~6 k file entries on EVERY call (~0.3-0.5 s at
+    * sf0.1, ×3 queries ×3 sweeps), yet the zone only changes when it is
+    * rebuilt. Caches the DataFrame HANDLE only — every action still
     * reads the files. */
-  private val binarySourceCache = new java.util.WeakHashMap[
-    SparkSession,
-    scala.collection.concurrent.TrieMap[(String, String, Long), DataFrame]]
-
   private def binaryFiles(spark: SparkSession, dir: String,
                           glob: String): DataFrame = {
     // staleness key: the SOURCE MANIFEST's content hash, not one file's
@@ -909,22 +902,7 @@ object MultimodalOps {
     // change whenever the zone contents can have
     val fp = java.util.Arrays.hashCode(java.nio.file.Files.readAllBytes(
       new java.io.File(dir, "_source_manifest").toPath)).toLong
-    val perSession = binarySourceCache.synchronized {
-      // a cached DataFrame strongly references its SparkSession, so the
-      // weak keying alone never collects stopped sessions (r15 advice);
-      // evict them explicitly — the publishedTables filterInPlace idiom
-      val it = binarySourceCache.entrySet().iterator()
-      while (it.hasNext)
-        if (it.next().getKey.sparkContext.isStopped) it.remove()
-      var m = binarySourceCache.get(spark)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap
-          .empty[(String, String, Long), DataFrame]
-        binarySourceCache.put(spark, m)
-      }
-      m
-    }
-    perSession.getOrElseUpdate((dir, glob, fp),
+    graft.Tables.resolved(spark, s"$dir/$glob", fp)(
       // coalesce to core count (guide §6 small files): binaryFile
       // charges each tiny file the 4 MB open cost, planning ~380 scan
       // tasks for ~6 k files at sf0.1 — per-task launch overhead

@@ -1919,7 +1919,7 @@ object TextOps {
     * holds (an LSM read; compaction is just a full rebuild). */
   private[graft] def lmCountsFromStats(spark: SparkSession,
                                        sfDir: String): DataFrame =
-    spark.read.parquet(ensureLmStats(spark, sfDir))
+    graft.Tables.resolved(spark, ensureLmStats(spark, sfDir))
       .groupBy("w1", "w2").agg(sum(col("cnt")).as("cnt"))
 
   /** [[lmSurprisal]] SERVED THROUGH THE DURABLE STATS STORE — the

@@ -97,7 +97,7 @@ object FrameStore {
         writeManifest(fs, p, entries)
         lastAction = s"rebuilt:$key"
       }
-      spark.read.parquet(dir)
+      graft.Tables.resolved(spark, dir)
     }
 
   /** Cold-soak seam: delete the stored frame for `key`. */

@@ -698,6 +698,18 @@ class TextIndexRewrite(spark: SparkSession) extends Rule[LogicalPlan]
       case _ => None
     }
 
+  /** `shape` over the memoized postings at `idxPath`
+    * ([[graft.Tables.resolved]]), analyzed, with the relation re-bound
+    * to fresh attribute ids: the memo hands every splice the same ids,
+    * and two rewrites in one plan (DocLenMatch and TermTfMatch both fire
+    * in a BM25 plan) must not share them. */
+  private def postings(idxPath: String)(shape: DataFrame => DataFrame): LogicalPlan =
+    shape(graft.Tables.resolved(spark, idxPath)).queryExecution.analyzed
+      .transformUpWithNewOutput { case r: LogicalRelation =>
+        val fresh = r.newInstance()
+        fresh -> r.output.zip(fresh.output)
+      }
+
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
     // each aggregate case evaluates the bareRegisteredScan walk ONCE
     // (match on the result, original node returned on None) — the
@@ -708,9 +720,7 @@ class TextIndexRewrite(spark: SparkSession) extends Rule[LogicalPlan]
       bareRegisteredScan(src).flatMap(TextIndexCatalog.lookup) match {
         case None => agg
         case Some(idxPath) =>
-      val probe = spark.read.parquet(idxPath)
-        .filter(col("term").isin(kws: _*))
-        .queryExecution.analyzed
+      val probe = postings(idxPath)(_.filter(col("term").isin(kws: _*)))
       val pDoc = probe.output.find(_.name == "doc_id").get
       val pTf = probe.output.find(_.name == "tf").get
       // output attribute ids are preserved (doc_id and the score alias),
@@ -735,7 +745,7 @@ class TextIndexRewrite(spark: SparkSession) extends Rule[LogicalPlan]
         case Some(idxPath) =>
       // document length = SUM(tf) over the FULL postings — the narrow
       // (term, doc_id, tf) columns replace a corpus tokenize
-      val probe = spark.read.parquet(idxPath).queryExecution.analyzed
+      val probe = postings(idxPath)(identity)
       val pDoc = probe.output.find(_.name == "doc_id").get
       val pTf = probe.output.find(_.name == "tf").get
       val sumTf = org.apache.spark.sql.catalyst.expressions.aggregate
@@ -760,9 +770,7 @@ class TextIndexRewrite(spark: SparkSession) extends Rule[LogicalPlan]
       // keywords (postings are distinct per pair, so the pruned
       // distinct-pair form maps to the same projection): the aggregate
       // disappears, the term set is pushed to the term-bucketed scan
-      val probe = spark.read.parquet(idxPath)
-        .filter(col("term").isin(kws: _*))
-        .queryExecution.analyzed
+      val probe = postings(idxPath)(_.filter(col("term").isin(kws: _*)))
       val pDoc = probe.output.find(_.name == "doc_id").get
       val pTerm = probe.output.find(_.name == "term").get
       val pTf = probe.output.find(_.name == "tf").get
@@ -826,9 +834,7 @@ class TextIndexRewrite(spark: SparkSession) extends Rule[LogicalPlan]
       conjuncts: Seq[Expression], pred: Expression,
       idxPath: String,
       termFilter: org.apache.spark.sql.Column): LogicalPlan = {
-    val probe = spark.read.parquet(idxPath)
-      .filter(termFilter).select("doc_id")
-      .queryExecution.analyzed
+    val probe = postings(idxPath)(_.filter(termFilter).select("doc_id"))
     val docId = child.output.find(_.name == "doc_id").get
     val idxDocId = probe.output.find(_.name == "doc_id").get
     val rest = conjuncts.filterNot(_ eq pred)
@@ -861,13 +867,12 @@ class TextIndexRewrite(spark: SparkSession) extends Rule[LogicalPlan]
             case Some((pred, terms, loc, docsPath)) =>
               val idxPath = TextIndexCatalog.lookup(docsPath).get
               val distinctTerms = terms.distinct
-              val probe = spark.read.parquet(idxPath)
+              val probe = postings(idxPath)(_
                 .filter(col("term").isin(distinctTerms: _*))
                 .groupBy("doc_id")
                 .agg(countDistinct(col("term")).as("nt"))
                 .filter(col("nt") === distinctTerms.length)
-                .select("doc_id")
-                .queryExecution.analyzed
+                .select("doc_id"))
               val docId = child.output.find(_.name == "doc_id").get
               val idxDocId = probe.output.find(_.name == "doc_id").get
               val rest = conjuncts.filterNot(_ eq pred)

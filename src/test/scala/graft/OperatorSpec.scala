@@ -561,6 +561,96 @@ class OperatorSpec extends AnyFunSuite {
     graft.plans.TextIndexCatalog.clear()
   }
 
+  /** Spark jobs started while `body` runs; the listener bus is drained
+    * before the listener attaches and before the count is read. */
+  private def jobsDuring(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        n.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.ListenerBusDrain.waitUntilEmpty(sc)
+    sc.addSparkListener(l)
+    try { body; org.apache.spark.ListenerBusDrain.waitUntilEmpty(sc) }
+    finally sc.removeSparkListener(l)
+    n.get
+  }
+
+  test("memoized postings: a warm session builds indexed frames and optimizes a keyword search with no job") {
+    graft.plans.TextIndexCatalog.clear()
+    graft.plans.TextIndexCatalog.ensureIndex(spark, sf0001)
+    // the first calls resolve the postings and the docs relation
+    ArticleOps.searchSnippetIndexed(spark, sf0001)
+    ArticleOps.searchBm25Indexed(spark, sf0001)
+    ArticleOps.searchKeyword(spark, sf0001, "spark").queryExecution.optimizedPlan
+    assert(jobsDuring(ArticleOps.searchSnippetIndexed(spark, sf0001)) == 0)
+    assert(jobsDuring(ArticleOps.searchBm25Indexed(spark, sf0001)) == 0)
+    val kw = ArticleOps.searchKeyword(spark, sf0001, "merge")
+    assert(jobsDuring(kw.queryExecution.optimizedPlan) == 0)
+    assert(kw.queryExecution.optimizedPlan.toString.contains("LeftSemi"),
+      "keyword search was not index-rewritten")
+    // the cold seam drops the memo: construction resolves (and counts) again
+    graft.Tables.clear()
+    assert(jobsDuring(ArticleOps.searchSnippetIndexed(spark, sf0001)) > 0)
+    graft.plans.TextIndexCatalog.clear()
+  }
+
+  test("memoized postings never serve a stale index: delta append and full rebuild are seen in-session") {
+    import spark.implicits._
+    import graft.plans.TextIndexCatalog
+    val tmp = java.nio.file.Files.createTempDirectory("graft-memo-idx").toString
+    val docsDir = s"$tmp/documents.parquet"
+    def write(rows: Seq[(Long, String)], mode: String): Unit =
+      rows.toDF("doc_id", "text")
+        .select(col("doc_id"), col("text"), lit("en").as("lang"),
+          lit("s").as("source"), length(col("text")).cast("long").as("n_chars"))
+        .coalesce(1).write.mode(mode).parquet(docsDir)
+    // every indexed path: the positional probe, the BM25 operator and
+    // the transparent rewrite of a keyword scan
+    def hits(kw: String): Seq[Set[Long]] = Seq(
+      ArticleOps.searchSnippetIndexed(spark, tmp, kw),
+      ArticleOps.searchBm25Indexed(spark, tmp, Seq(kw)),
+      ArticleOps.searchKeyword(spark, tmp, kw))
+      .map(_.select("doc_id").as[Long].collect().toSet)
+    TextIndexCatalog.clear()
+    write(Seq((1L, "alpha beta"), (2L, "beta gamma")), "overwrite")
+    TextIndexCatalog.ensureIndex(spark, tmp)
+    assert(hits("gamma").forall(_ == Set(2L)))
+    assert(hits("delta").forall(_.isEmpty))
+    write(Seq((3L, "gamma delta")), "append")
+    TextIndexCatalog.ensureIndex(spark, tmp)
+    assert(TextIndexCatalog.lastBuild.nonEmpty, "append must build a delta")
+    assert(hits("delta").forall(_ == Set(3L)), s"delta append unseen: ${hits("delta")}")
+    assert(hits("gamma").forall(_ == Set(2L, 3L)))
+    write(Seq((1L, "alpha beta"), (9L, "omega delta")), "overwrite")
+    TextIndexCatalog.ensureIndex(spark, tmp)
+    assert(TextIndexCatalog.lastBuild.nonEmpty, "rewrite must rebuild")
+    assert(hits("delta").forall(_ == Set(9L)), s"rebuild unseen: ${hits("delta")}")
+    assert(hits("gamma").forall(_.isEmpty))
+    TextIndexCatalog.clear()
+  }
+
+  test("TextIndexRewrite splices the memoized postings with fresh attribute ids") {
+    import spark.implicits._
+    graft.plans.TextIndexCatalog.clear()
+    val expected = ArticleOps.searchBm25(spark, sf0001)
+      .select("doc_id", "score").as[(Long, Long)].collect().toSeq
+    ArticleOps.searchBm25Auto(spark, sf0001).queryExecution.optimizedPlan
+    // DocLenMatch and TermTfMatch both splice the same memoized relation
+    val df = ArticleOps.searchBm25Auto(spark, sf0001)
+    val leaves = df.queryExecution.optimizedPlan.collectLeaves()
+    assert(leaves.count(_.toString.contains("Relation [term")) >= 2)
+    val ids = leaves.flatMap(_.output.map(_.exprId))
+    assert(ids.distinct.size == ids.size,
+      s"two leaves share attribute ids:\n${df.queryExecution.optimizedPlan}")
+    assert(df.select("doc_id", "score").as[(Long, Long)].collect().toSeq
+      == expected, "transparent BM25 diverges from the scan form")
+    graft.plans.TextIndexCatalog.clear()
+  }
+
   test("diacritic-folded search recovers accented docs a plain token match misses") {
     import spark.implicits._
     val folded = ArticleOps.searchDiacriticFolded(spark, sf0001)

@@ -5,8 +5,10 @@
 #   tools/gate.sh [sfDir]        # default /root/testdata/sf0.01
 #
 # Chains, failing fast on the first red:
-#   0. one session factory      — graft.Harness holds the only
-#                                 SparkSession.builder in src/main
+#   0. one factory, one memo    — graft.Harness holds the only
+#                                 SparkSession.builder in src/main;
+#                                 no postings directory is read around
+#                                 the graft.Tables relation memo
 #   1. sbt test                 — every ScalaTest suite (streaming,
 #                                 property, plan-shape, spill specs)
 #   2. graft.EntrySmoke         — flagship query returns rows at sf0.001
@@ -30,10 +32,12 @@ SF="${1:-/root/testdata/sf0.01}"
 OUT="$(mktemp -d /tmp/graft-gate.XXXXXX)"
 trap 'rm -rf "$OUT"' EXIT
 
-echo "== gate 0/4: one session factory =="
+echo "== gate 0/4: one session factory, one relation memo =="
 BUILDERS="$(grep -rl 'SparkSession.builder' src/main || true)"
 [ "$BUILDERS" = "src/main/scala/graft/Harness.scala" ] || {
   echo "FAIL: SparkSession.builder outside graft.Harness: $BUILDERS"; exit 1; }
+if grep -rnE 'read\.parquet\((idxPath|idxDir)\)' src/main; then
+  echo "FAIL: postings read outside graft.Tables.resolved"; exit 1; fi
 
 echo "== gate 1/4: sbt test =="
 sbt -batch test
